@@ -23,7 +23,7 @@ import time
 def main():
     ap = argparse.ArgumentParser(prog="detectingscc_spark")
     ap.add_argument("--algo", required=True,
-                    choices=["scc", "scc-coloring", "scc-partitioned", "scc-csr",
+                    choices=["scc", "scc-coloring", "scc-partitioned",
                              "cc", "pagerank", "ppr", "lpa", "triangles", "kcore",
                              "bfs", "hits", "salsa", "eigen", "harmonic", "ktruss",
                              "linkpred", "ann-build", "ann-probe"])
@@ -44,12 +44,6 @@ def main():
     ap.add_argument("--no-trim2", action="store_true", help="reference -q off")
     ap.add_argument("--trim-iters", type=int, default=4, help="reference -p depth")
     ap.add_argument("--local-finish-edges", type=int, default=0)
-    ap.add_argument("--bfs-unroll", type=int, default=1,
-                    help="BFS hops per driver action (windowed; 1 is the "
-                    "measured-fastest default, BASELINE.md head-to-head)")
-    ap.add_argument("--hub-degree-threshold", type=int, default=5_000_000,
-                    help="salt hub adjacency above this residual degree; "
-                    "below it AQE skew-join splitting is the measured default")
     ap.add_argument("--n-parts", type=int, default=32)
     ap.add_argument("--index-path", default=None,
                     help="persisted ANN index dir (required for "
@@ -175,16 +169,13 @@ def main():
         state_format=args.state_format,
     )
     t0 = time.time()
-    if args.algo in ("scc", "scc-csr"):
+    if args.algo == "scc":
         from .operators.scc import strongly_connected_components
 
         result = strongly_connected_components(
             spark, edges, vertices, runner=runner,
             trim2_enabled=not args.no_trim2, trim_iters=args.trim_iters,
             local_finish_edges=args.local_finish_edges,
-            expand="csr" if args.algo == "scc-csr" else "join",
-            bfs_unroll=args.bfs_unroll,
-            hub_degree_threshold=args.hub_degree_threshold,
         )
         n_groups = result.select("scc_id").distinct().count()
     elif args.algo == "scc-coloring":

@@ -10,8 +10,7 @@ Re-expresses the reference's `vHong` driver
   trim2                scc_kernels.cu:236-357          indeg==1 mutual-only-neighbor self-join
   pivot election       scc_kernels.cu:57-74,643-656    groupBy(range).agg(max_by(id, struct(prod,-id)))
                        (racy argmax)                   -> deterministic tie-break
-  FW/BW BFS            scc_kernels.cu:360-386,419-445  frontier join vs residual edges,
-                                                       or Arrow CSR multi-hop kernel
+  FW/BW BFS            scc_kernels.cu:360-386,419-445  frontier join vs residual edges
   update 3r+fw+2bw     scc_kernels.cu:124-142          (range,sub)->min(id) re-labeling
                                                        (bounded labels, no 3^k overflow)
   WCC decomposition    scc_WCC.cu:829-840              hash-min + pointer jumping
@@ -36,14 +35,13 @@ Superstep fixed-cost discipline (the scaling-efficiency levers):
   * ONE driver action per tick — row counts ride as observed metrics of
     the materialization job itself (superstep.py), never a second count.
   * ONE join per BFS hop — FW/BW edges and frontiers share a dir tag.
-    Hops are deliberately NOT fused into multi-hop windows: Spark does
-    not reuse subplans, so a fused window recomputes every inner level
-    once per outer level (measured 5x slower at unroll=4 than
-    one-materialized-hop-at-a-time; `bfs_unroll` stays 1).
+    Each hop is materialized on its own: Spark does not reuse subplans,
+    so fused multi-hop windows recompute every inner level once per
+    outer level (measured slower at every size, BASELINE.md).
   * Frontier joins and visited anti-joins broadcast while the driver-
-    known row count is under BROADCAST_ROW_LIMIT; past it the edge side
-    is salted (hash(v) % SALT_PARTS) so hub adjacency spreads across
-    shuffle partitions (north_star skew mandate).
+    known row count is under BROADCAST_ROW_LIMIT; past it they are plain
+    shuffle joins, and AQE skew-join splitting spreads hub adjacency
+    (per-hub salting measured slower, BASELINE.md).
   * Retired vertices accumulate as materialized fragments; the `done`
     set is their lazy union (no O(done) rewrite per emit).
   * trim1 re-derives the residual lazily per iteration and materializes
@@ -59,16 +57,14 @@ from pyspark.sql import functions as F
 
 from ..plans.superstep import SuperstepRunner
 
-BROADCAST_ROW_LIMIT = 1_500_000  # (dir,id) rows ~16B each -> <=24MB broadcast
-# anti-join build side (visited set) is monotonically GROWING; its cap
-# was 300k on the theory that the per-hop O(|vis|) driver collect is the
-# binding cost, but a round-7 order-alternated A/B at 4x bench scale
-# (941k edges, vis peaking ~800k rows) measured the shuffle anti-join it
-# falls back to — which sort-merges level AND vis every hop — ~10%
-# SLOWER end to end than broadcasting up to the same 24MB byte bound the
-# frontier broadcasts use. Past 1.5M rows the anti-join still shuffles
-# (AQE-sized), keeping data motion on the executors where it belongs.
-ANTI_BROADCAST_ROW_LIMIT = BROADCAST_ROW_LIMIT
+# (dir,id) rows ~16B each -> <=24MB broadcast. The same cap bounds the
+# BFS visited-set anti-join, whose build side GROWS every hop: at a 300k
+# cap a round-7 order-alternated A/B at 4x bench scale (941k edges, vis
+# peaking ~800k rows) measured the shuffle anti-join it falls back to —
+# which sort-merges level AND vis every hop — ~10% SLOWER end to end than
+# broadcasting up to this byte bound. Past it the anti-join still
+# shuffles (AQE-sized), keeping data motion on the executors.
+BROADCAST_ROW_LIMIT = 1_500_000
 
 
 def _bc(df: DataFrame, cnt: int | None) -> DataFrame:
@@ -146,81 +142,6 @@ def _tarjan_local(edge_rows, vertex_ids):
     return result
 
 
-def _csr_multihop_kernel(block: int):
-    """Arrow-vectorized block-local multi-hop BFS kernel (the north_star's
-    'sparse gather-scatter over per-partition CSR adjacency blocks').
-
-    Cogrouped inputs per block p (vertices v with v // block == p):
-      edges  (u, v): all residual edges whose EXPANDING endpoint u is local
-      states (id, vis, fr): local active vertices, visited + frontier flags
-    Output (id, local): local=True rows are definitively newly-visited
-    local vertices (already expanded in here, multi-hop); local=False rows
-    are remote frontier candidates the driver validates.
-    """
-    import numpy as np
-    import pandas as pd
-
-    empty = {"id": "int64", "local": "bool"}
-
-    def kernel(key, epdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        if len(spdf) == 0:
-            return pd.DataFrame({"id": [], "local": []}).astype(empty)
-        p = int(key[0])
-        frontier_ids = spdf.loc[spdf["fr"], "id"].to_numpy(dtype=np.int64)
-        if frontier_ids.size == 0:
-            return pd.DataFrame({"id": [], "local": []}).astype(empty)
-        u = epdf["u"].to_numpy(dtype=np.int64) if len(epdf) else np.empty(0, np.int64)
-        v = epdf["v"].to_numpy(dtype=np.int64) if len(epdf) else np.empty(0, np.int64)
-        local_ids = spdf["id"].to_numpy(dtype=np.int64)
-        vis_flags = spdf["vis"].to_numpy(dtype=bool)
-
-        order = np.argsort(u, kind="stable")
-        u_s, v_s = u[order], v[order]
-        sort_nodes = np.sort(local_ids)
-        row_start = np.searchsorted(u_s, sort_nodes, side="left")
-        row_end = np.searchsorted(u_s, sort_nodes, side="right")
-        vis = np.zeros(len(sort_nodes), dtype=bool)
-        vis[np.searchsorted(sort_nodes, local_ids)] = vis_flags
-
-        cur = np.unique(frontier_ids)
-        new_local: list = []
-        remote: list = []
-        while cur.size:
-            idx = np.searchsorted(sort_nodes, cur)
-            starts, ends = row_start[idx], row_end[idx]
-            counts = ends - starts
-            total = int(counts.sum())
-            if total == 0:
-                break
-            base = np.repeat(starts, counts)
-            csum = np.repeat(np.cumsum(counts) - counts, counts)
-            nbrs = np.unique(v_s[base + (np.arange(total) - csum)])
-            is_local = (nbrs // block) == p
-            rem = nbrs[~is_local]
-            if rem.size:
-                remote.append(rem)
-            loc = nbrs[is_local]
-            if loc.size == 0:
-                break
-            li = np.searchsorted(sort_nodes, loc)
-            fresh = loc[~vis[li]]
-            if fresh.size == 0:
-                break
-            vis[np.searchsorted(sort_nodes, fresh)] = True
-            new_local.append(fresh)
-            cur = fresh
-        nl = np.unique(np.concatenate(new_local)) if new_local else np.empty(0, np.int64)
-        rm = np.unique(np.concatenate(remote)) if remote else np.empty(0, np.int64)
-        return pd.DataFrame(
-            {
-                "id": np.concatenate([nl, rm]),
-                "local": np.concatenate([np.ones(nl.size, bool), np.zeros(rm.size, bool)]),
-            }
-        )
-
-    return kernel
-
-
 def strongly_connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -235,13 +156,6 @@ def strongly_connected_components(
     decompose_iters: int = 12,
     trim2_enabled: bool = True,
     trim_iters: int = 4,
-    expand: str = "join",
-    bfs_unroll: int = 1,
-    # 5M, not lower: a measured 4M-vertex run with a planted 3M-degree hub
-    # showed AQE skew-join splitting alone at data-scaling parity while
-    # per-hub salting cost 1.5x end to end (BASELINE.md round-3 skew
-    # table) — salting engages only past the regime AQE covers
-    hub_degree_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Compute SCCs of a directed graph given as edges(src, dst).
 
@@ -249,8 +163,6 @@ def strongly_connected_components(
     V explicitly; vertices without arcs are singleton SCCs — e.g.
     /root/reference/data/sample0.gr has V=6 with two arcless vertices).
 
-    `expand`: "join" (frontier joins, always-correct baseline) or "csr"
-    (Arrow block-CSR multi-hop kernel; supersteps = cross-block hops).
     Set `local_finish_edges > 0` to let the driver finish a sub-threshold
     residual with in-memory Tarjan; tests exercise both paths.
     """
@@ -270,7 +182,11 @@ def strongly_connected_components(
             verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
         init = verts.select("id", F.lit(0).cast("long").alias("range"))
         active, a_cnt = runner.tick("active", init)
-        # round-1 residual: the ONLY pass over the full edge table
+        # round-1 residual: the ONLY pass over the full edge table.
+        # localCheckpoint drops the src keying, but AQE coalesces this
+        # shuffle by bytes and every later residual tick inherits its
+        # partition count: without it the distinct's 32 partitions carry
+        # through (10k-file benchmark graph: 680 more tasks, slower run)
         re, _ = runner.tick("re", E.withColumn("range", F.lit(0).cast("long")).repartition("src"), detach=False)
         rnd = 0
         first_done = spark.createDataFrame([], "id long, scc_id long")
@@ -397,15 +313,8 @@ def strongly_connected_components(
             F.coalesce(F.col("id") == F.col("pivot"), F.lit(False)).alias("bw"),
         )
 
-        if expand == "csr":
-            state, hops = _bfs_csr(runner, spark, re, state, max_bfs_hops)
-        else:
-            state, hops = _bfs_join(
-                runner, re, re_cnt, state, max_bfs_hops,
-                unroll=bfs_unroll, hub_degree_threshold=hub_degree_threshold,
-                n_active=a_cnt,
-            )
-        runner.log("bfs", hops=hops, mode=expand)
+        state, hops = _bfs_join(runner, re, re_cnt, state, max_bfs_hops, n_active=a_cnt)
+        runner.log("bfs", hops=hops)
 
         # ---- update: FW∩BW = pivot's SCC; survivors re-ranged ---------
         in_scc = state.where(F.col("fw") & F.col("bw"))
@@ -446,9 +355,6 @@ def _assemble_state(runner, state, vis_f, vis_b):
     return out
 
 
-SALT_PARTS = 8
-
-
 def _part_target(rows: int | None, spark=None, bytes_per_row: int = 24) -> int:
     """Partition count sized by DATA VOLUME (~16MB each), capped at the
     session's shuffle parallelism — cached iterative state should never
@@ -463,31 +369,20 @@ def _part_target(rows: int | None, spark=None, bytes_per_row: int = 24) -> int:
     return max(1, min(cap, (rows * bytes_per_row) // (16 << 20) + 1))
 
 
-def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, unroll=1,
-              hub_degree_threshold=5_000_000, n_active=None):
+def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active=None):
     """Single-job bidirectional frontier BFS.
 
     FW and BW edges are unioned into ONE frame tagged `dir` (0=fwd edge
     (src->dst), 1=bwd edge (dst->src)); the frontier carries the same tag,
     so both directions expand in ONE join per hop — half the Spark jobs
     of the previous two-thread design and no executor pool (the fix for
-    the superstep fixed-cost scaling bottleneck). `unroll` hops run
-    inside one job via join+distinct+anti-vis chains; the union of
-    levels, tagged with their window offset, is materialized once per
-    window (one driver action per k hops), and only the LAST level
-    becomes the next frontier — no re-expansion of inner levels.
+    the superstep fixed-cost scaling bottleneck). Each hop's new level is
+    materialized once and becomes the next frontier.
 
-    Skew (north_star "skew-aware salting of hub vertices"): while the
-    frontier is broadcast-able the join is a map-side hash join and hubs
-    are irrelevant. Past BROADCAST_ROW_LIMIT the hop is a shuffle join,
-    where ONLY detected hubs (residual degree > hub_degree_threshold)
-    get special treatment: their adjacency is re-keyed with
-    salt = hash(v) % SALT_PARTS and only the hub frontier rows explode
-    x SALT_PARTS — non-hub edges join plainly (AQE skew splitting covers
-    moderate imbalance). Salting everything would tax every hop x8 for
-    skew that usually is not there; per-hub salting is the Spark analog
-    of the reference dispatching warp/CTA kernels only for high-degree
-    vertices (/root/reference/include/scc_kernels.h:46-105)."""
+    Skew: while the frontier is broadcast-able the join is a map-side
+    hash join and hubs are irrelevant. Past BROADCAST_ROW_LIMIT the hop
+    is a plain shuffle join, where AQE skew-join splitting (enabled in
+    session.py) spreads a hub's adjacency over several tasks."""
     ed = re_f.select(F.lit(0).alias("dir"), F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
         re_f.select(F.lit(1).alias("dir"), F.col("dst").alias("u"), F.col("src").alias("v"))
     )
@@ -520,110 +415,24 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, unroll=1,
     COMPACT_EVERY = 8
     vis, vis_cnt = front, cnt
     frag_slots: list[str] = []
-    hubs, hub_cnt, ed_rest, ed_hub = None, 0, None, None
-    # `hops` counts REAL BFS hops (a window of k unrolled levels advances
-    # it by k), so max_bfs_hops bounds traversal depth and the returned
-    # depth feeds metrics with its documented meaning regardless of unroll
     hops = 0
     while cnt > 0:
-        # abort only when the window STARTS at/past the budget: a window
-        # whose start is within budget may legitimately finish the BFS
-        # even though start + unroll overshoots (e.g. budget 10000,
-        # unroll 3, true depth 10000 must not raise at hops=10002)
         if hops >= max_bfs_hops:
             raise RuntimeError("BFS exceeded max hops")
-        hops += unroll
-        if cnt > BROADCAST_ROW_LIMIT and hubs is None:
-            # first shuffle-join hop: split the edge frame once into hub
-            # adjacency (salted) and the rest (joined plainly)
-            hubs, hub_cnt = runner.tick(
-                "bfs_hubs",
-                ed.groupBy("dir", "u").count()
-                .where(F.col("count") > hub_degree_threshold).select("dir", "u"),
-                detach=False,
-            )
-            if hub_cnt:
-                ed_rest, _ = runner.tick(
-                    "bfs_ed_rest",
-                    ed.join(F.broadcast(hubs), ["dir", "u"], "left_anti"),
-                    truncate=False, count=False, detach=False,
-                )
-                ed_hub, _ = runner.tick(
-                    "bfs_ed_hub",
-                    ed.join(F.broadcast(hubs), ["dir", "u"], "left_semi").withColumn(
-                        "salt", F.pmod(F.xxhash64("v"), F.lit(SALT_PARTS)).cast("int")
-                    ).repartition("dir", "u", "salt"),
-                    truncate=False, count=False, detach=False,
-                )
-        level = front
-        win_levels = []
-        for w in range(unroll):
-            runner.bump("FWD_iterations")
-            runner.bump("BWD_iterations")
-            lf = level.withColumnRenamed("id", "u")
-            # `cnt` measures the WINDOW-START frontier only; an inner level
-            # (w > 0) has unknown — possibly far larger — size, so only the
-            # first hop of a window may take the forced-broadcast path;
-            # inner hops fall back to a shuffle join (AQE re-plans them to
-            # broadcast at runtime if the materialized side turns out tiny)
-            if w == 0 and cnt <= BROADCAST_ROW_LIMIT:
-                joined = ed.join(F.broadcast(lf), ["dir", "u"])
-            elif hub_cnt:
-                lf_hub = (
-                    lf.join(F.broadcast(hubs), ["dir", "u"], "left_semi")
-                    .select("dir", "u", F.explode(F.expr(f"sequence(0, {SALT_PARTS - 1})")).alias("salt"))
-                )
-                joined = ed_rest.join(lf, ["dir", "u"]).unionByName(
-                    ed_hub.join(lf_hub, ["dir", "u", "salt"]).drop("salt")
-                )
-            else:
-                # big frontier, no extreme hubs: plain shuffle join; AQE
-                # skew-join splitting covers moderate imbalance (and, per
-                # the BASELINE.md skew head-to-head, a 3M-degree hub too)
-                joined = ed.join(lf, ["dir", "u"])
-            vis_b = F.broadcast(vis) if vis_cnt <= ANTI_BROADCAST_ROW_LIMIT else vis
-            level = (
-                joined.select("dir", F.col("v").alias("id"))
-                .distinct()
-                .join(vis_b, ["dir", "id"], "left_anti")
-            )
-            # in-window dedup: short cycles can rediscover a vertex from
-            # an earlier (not yet visited-merged) window level
-            for prev in win_levels:
-                level = level.join(prev, ["dir", "id"], "left_anti")
-            win_levels.append(level)
-        # ONE materialization per window: levels union tagged with their
-        # window offset `w`; the last level (w = unroll-1) is the next
-        # frontier, the whole frame joins the visited set. Both counts
-        # ride the same job as observed metrics, so a window of k hops
-        # costs ONE driver action (the round-2 unroll re-expanded every
-        # level next window — measured SLOWER at 1M; tags fix that).
-        acc = None
-        for w, lv in enumerate(win_levels):
-            tagged = lv.withColumn("w", F.lit(w))
-            acc = tagged if acc is None else acc.unionByName(tagged)
-        if unroll == 1:
-            new, n_cnt = runner.tick(f"bfs_new_{hops}", acc.drop("w"), detach=False)
-            last_cnt, front_next = n_cnt, new
-        else:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            acc = acc.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_total"),
-                F.sum(F.when(F.col("w") == unroll - 1, 1).otherwise(0)).alias("n_last"),
-            )
-            new_tagged, _ = runner.tick(f"bfs_new_{hops}", acc, count=False, detach=False)
-            m = obs.get
-            n_cnt = int(m["n_total"] or 0)
-            last_cnt = int(m["n_last"] or 0)
-            new = new_tagged.drop("w")
-            front_next = new_tagged.where(F.col("w") == unroll - 1).drop("w")
-        if n_cnt:
+        hops += 1
+        runner.bump("FWD_iterations")
+        runner.bump("BWD_iterations")
+        new = (
+            ed.join(_bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
+            .select("dir", F.col("v").alias("id"))
+            .distinct()
+            .join(_bc(vis, vis_cnt), ["dir", "id"], "left_anti")
+        )
+        new, cnt = runner.tick(f"bfs_new_{hops}", new, detach=False)
+        if cnt:
             frag_slots.append(f"bfs_new_{hops}")
             vis = vis.unionByName(new)
-            vis_cnt += n_cnt
+            vis_cnt += cnt
             if len(frag_slots) >= COMPACT_EVERY:
                 vis, _ = runner.tick("bfs_vis", vis, count=False, detach=False)
                 # newest fragment stays alive: it is the live frontier for
@@ -633,105 +442,14 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, unroll=1,
                 frag_slots = frag_slots[-1:]
         else:
             runner.release(f"bfs_new_{hops}")
-        front, cnt = front_next, last_cnt
+        front = new
     final = _assemble_state(
         runner, state,
         vis.where("dir = 0").select("id"),
         vis.where("dir = 1").select("id"),
     )
-    for slot in ["bfs_ed", "bfs_hubs", "bfs_ed_rest", "bfs_ed_hub",
-                 "bfs_front", "bfs_vis"] + frag_slots:
+    for slot in ["bfs_ed", "bfs_front", "bfs_vis"] + frag_slots:
         runner.release(slot)
-    return final, hops
-
-
-def _bfs_csr(runner, spark, re_f, state, max_bfs_hops):
-    """FW+BW reachability via the block-partitioned CSR multi-hop kernel.
-    Supersteps count cross-block transitions only (block-local expansion
-    runs to exhaustion inside each Arrow batch) — the Spark analog of the
-    reference's partition-local BFS (fwdLocal,
-    /root/reference/src/scc_kernels.cu:388-416)."""
-    n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    max_id = state.agg(F.max("id")).first()[0]
-    block = int(max_id) // n_blocks + 1
-
-    def floordiv_block(col: str):
-        # integer FLOOR division, exactly matching the kernel's numpy
-        # `nbrs // block` for negative ids too (float division truncates
-        # toward zero and loses precision past 2^53)
-        return F.expr(f"({col} - pmod({col}, {block})) DIV {block}")
-
-    kernel = _csr_multihop_kernel(block)
-
-    ef = re_f.select(
-        floordiv_block("src").alias("p"),
-        F.col("src").alias("u"),
-        F.col("dst").alias("v"),
-    )
-    ef, _ = runner.tick("csr_ef", ef.repartition(n_blocks, "p"), truncate=False, detach=False)
-    eb = re_f.select(
-        floordiv_block("dst").alias("p"),
-        F.col("dst").alias("u"),
-        F.col("src").alias("v"),
-    )
-    eb, _ = runner.tick("csr_eb", eb.repartition(n_blocks, "p"), truncate=False, detach=False)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    ids, _ = runner.tick("csr_ids", state.select("id"), count=False)
-    seeds, seed_cnt = runner.tick("seeds", state.where("fw").select("id"), detach=False)
-    sides = {
-        "f": {"edges": ef, "vis": seeds, "front": seeds, "cnt": seed_cnt,
-              "counter": "FWD_iterations", "slot": "f"},
-        "b": {"edges": eb, "vis": seeds, "front": seeds, "cnt": seed_cnt,
-              "counter": "BWD_iterations", "slot": "b"},
-    }
-
-    def step(s):
-        runner.bump(s["counter"])
-        s_in = (
-            ids.join(s["vis"].withColumn("v", F.lit(True)), "id", "left")
-            .join(s["front"].withColumn("f", F.lit(True)), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("v"), F.lit(False)).alias("vis"),
-                F.coalesce(F.col("f"), F.lit(False)).alias("fr"),
-            )
-        )
-        out = (
-            s["edges"].groupBy("p")
-            .cogroup(s_in.groupBy(floordiv_block("id").alias("p")))
-            .applyInPandas(kernel, "id long, local boolean")
-        )
-        out, _ = runner.tick(f"csr_out_{s['slot']}", out, count=False)
-        new_local, _ = runner.tick(f"csr_nl_{s['slot']}", out.where("local").select("id"), count=False)
-        new_remote = (
-            out.where(~F.col("local")).select("id")
-            .join(s["vis"], "id", "left_anti")
-            .join(new_local, "id", "left_anti")
-        )
-        new_remote, r_cnt = runner.tick(f"front_{s['slot']}", new_remote, detach=False)
-        vis, _ = runner.tick(
-            f"vis_{s['slot']}",
-            s["vis"].unionByName(new_local).unionByName(new_remote),
-            count=False,
-            detach=False,
-        )
-        s["vis"], s["front"], s["cnt"] = vis, new_remote, r_cnt
-
-    hops = 0
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        while sides["f"]["cnt"] > 0 or sides["b"]["cnt"] > 0:
-            hops += 1
-            if hops > max_bfs_hops:
-                raise RuntimeError("CSR BFS exceeded max hops")
-            futs = [pool.submit(step, s) for s in sides.values() if s["cnt"] > 0]
-            for fut in futs:
-                fut.result()
-    final = _assemble_state(runner, state, sides["f"]["vis"], sides["b"]["vis"])
-    for s in ("csr_out_f", "csr_out_b", "csr_nl_f", "csr_nl_b", "csr_ef", "csr_eb",
-              "csr_ids", "seeds", "front_f", "front_b", "vis_f", "vis_b"):
-        runner.release(s)
     return final, hops
 
 

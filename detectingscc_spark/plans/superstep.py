@@ -139,10 +139,7 @@ class SuperstepRunner:
             old = self._live.get(name)
             self._live[name] = new
         if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            old.unpersist()
         if detach:
             return self._detach(new), cnt
         # fresh expression ids only (no stats reset, no conversion cost)
@@ -189,18 +186,12 @@ class SuperstepRunner:
         if new is not None:
             self._live[dst] = new
         if old is not None and old is not new:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            old.unpersist()
 
     def release(self, name: str) -> None:
         old = self._live.pop(name, None)
         if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            old.unpersist()
 
     def release_all(self) -> None:
         for name in list(self._live):

@@ -22,7 +22,6 @@ def _check_all_variants(spark, erows, vids):
     exp = kosaraju_scc(erows, vids)
     for fn, name in (
         (lambda: strongly_connected_components(spark, edges, verts), "fbtrim"),
-        (lambda: strongly_connected_components(spark, edges, verts, bfs_unroll=3), "fbtrim-u3"),
         (lambda: scc_coloring(spark, edges, verts), "coloring"),
         (lambda: scc_partitioned(spark, edges, verts, n_parts=4), "partitioned"),
     ):

@@ -29,8 +29,6 @@ from detectingscc_spark.operators.scc import strongly_connected_components
 
 cpus = os.environ["SPARK_GRAFT_CPUS"]
 n_files = int(os.environ.get("SPARK_GRAFT_BENCH_FILES", "100000"))
-expand = os.environ.get("SPARK_GRAFT_EXPAND", "join")
-unroll = int(os.environ.get("SPARK_GRAFT_UNROLL", "1"))
 spark = get_spark(app_name=f"scaling-{cpus}", master=f"local[{cpus}]",
                   shuffle_partitions=int(cpus))
 corpus = generate_corpus(spark, n_files).persist(); corpus.count()
@@ -40,12 +38,10 @@ t0 = time.time()
 # local_finish_edges=0: fully distributed — the scaling criterion must not
 # include a serial driver-side Tarjan tail (identical at both levels)
 n = strongly_connected_components(spark, edges, verts.select("id"),
-                                  local_finish_edges=0, expand=expand,
-                                  bfs_unroll=unroll).count()
+                                  local_finish_edges=0).count()
 dt = time.time() - t0
 assert n == n_files
-print(json.dumps({"cpus": int(cpus), "wall_sec": dt, "expand": expand,
-                  "unroll": unroll,
+print(json.dumps({"cpus": int(cpus), "wall_sec": dt,
                   "edges": n_edges, "edges_per_sec": n_edges / dt}))
 """
 
