@@ -42,7 +42,7 @@ def bfs_distances(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    E, _ = runner.tick("edges", E.repartition("src"), detach=False)
+    E, _ = runner.tick("edges", E, detach=False)
 
     seed = sources.select(F.col("id").cast("long")).distinct().withColumn(
         "dist", F.lit(0).cast("long")
@@ -83,13 +83,13 @@ def bfs_distances(
             settled_view, _ = runner.tick(
                 "settled_base", settled_view, count=False, detach=False
             )
-            # newest fragment stays alive: it is the live frontier for the
-            # next hop's join (its blocks must not be dropped)
+            # the newest fragment is in the base now; it lives on only as
+            # the next hop's frontier (its blocks must not be dropped)
             for s in frag_slots[:-1]:
                 runner.release(s)
-            frag_slots = frag_slots[-1:]
+            runner.promote(frag_slots[-1], "frontier")
+            frag_slots = []
         front = new.select("id")
         f_cnt = n_cnt
-    result = settled_view.select("id", "dist")
-    runner.release("edges")
-    return result
+    runner.finish("settled_base", *frag_slots)
+    return settled_view.select("id", "dist")

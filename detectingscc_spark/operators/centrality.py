@@ -46,7 +46,7 @@ def landmark_distances(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    E, _ = runner.tick("edges", E.repartition("src"), detach=False)
+    E, _ = runner.tick("edges", E, detach=False)
 
     seed = (
         landmarks.select(F.col("id").cast("long"))
@@ -81,14 +81,16 @@ def landmark_distances(
             settled_view, _ = runner.tick(
                 "settled_base", settled_view, count=False, detach=False
             )
+            # the newest fragment is in the base now; it lives on only as
+            # the next hop's frontier (its blocks must not be dropped)
             for s in frag_slots[:-1]:
                 runner.release(s)
-            frag_slots = frag_slots[-1:]
+            runner.promote(frag_slots[-1], "frontier")
+            frag_slots = []
         front = new.select("lm", "id")
         f_cnt = n_cnt
-    result = settled_view.select("lm", "id", "dist")
-    runner.release("edges")
-    return result
+    runner.finish("settled_base", *frag_slots)
+    return settled_view.select("lm", "id", "dist")
 
 
 def harmonic_centrality(

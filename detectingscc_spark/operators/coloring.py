@@ -54,8 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc, _canonical_edges
+from ..plans.superstep import SuperstepRunner, bc, part_target
+from .scc import _canonical_edges
 
 
 def scc_coloring(
@@ -106,7 +106,7 @@ def scc_coloring(
         # residual edges between active vertices (round 1: every vertex is
         # active, the filter is a no-op — skip the tick entirely)
         if rnd > 1:
-            av = _bc(active, a_cnt)
+            av = bc(active, a_cnt)
             re, re_cnt = runner.tick(
                 "re",
                 re.join(av.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -134,8 +134,8 @@ def scc_coloring(
         if trimmed:
             re, re_cnt = runner.tick(
                 "re",
-                re.join(_bc(active, a_cnt).withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(_bc(active, a_cnt).withColumnRenamed("id", "dst"), "dst", "left_semi"),
+                re.join(bc(active, a_cnt).withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(bc(active, a_cnt).withColumnRenamed("id", "dst"), "dst", "left_semi"),
                 detach=False,
             )
 
@@ -146,23 +146,10 @@ def scc_coloring(
         # out-edges. Monotone increasing; sum fixpoint = converged.
         from pyspark.sql import Observation
 
-        from .scc import BROADCAST_ROW_LIMIT, _part_target
-
-        # while the color frame is broadcast-able every pull join is
-        # broadcast-hash, so a PERSISTED copy of the residual partitioned
-        # by the pull's AGG key (src) makes each propagation tick's
-        # aggregation exchange-free (persist, unlike localCheckpoint,
-        # preserves partitioning and the broadcast join carries it
-        # through). Past the broadcast regime the pull is a shuffle join
-        # on dst and the re frame is used as-is.
-        if a_cnt <= BROADCAST_ROW_LIMIT:
-            prop_re, _ = runner.tick(
-                "prop_re",
-                re.repartition(_part_target(re_cnt), "src"),
-                truncate=False, count=False, detach=False,
-            )
-        else:
-            prop_re = re
+        # residual copy keyed by the pull's agg key (src) while colors
+        # broadcast — each propagation tick's aggregation is then
+        # exchange-free — by the pull join's key (dst) past the limit
+        prop_re = runner.keyed("prop_re", re, a_cnt, "src", "dst", parts=part_target(re_cnt))
 
         col_df, _ = runner.tick("color", active.select("id", F.col("id").alias("color")))
         prev = None
@@ -174,7 +161,7 @@ def scc_coloring(
                 # lookup side is the detached (stats-reset) color frame —
                 # hint the broadcast from the driver-known row count
                 cur = cur.join(
-                    _bc(col_df.select(F.col("id").alias("color"), F.col("color").alias("cc")), a_cnt),
+                    bc(col_df.select(F.col("id").alias("color"), F.col("color").alias("cc")), a_cnt),
                     "color",
                     "left",
                 ).select(
@@ -182,12 +169,12 @@ def scc_coloring(
                     F.greatest(F.col("color"), F.coalesce(F.col("cc"), F.col("color"))).alias("color"),
                 )
             nbr = (
-                prop_re.join(_bc(cur.select(F.col("id").alias("dst"), F.col("color").alias("nc")), a_cnt), "dst")
+                prop_re.join(bc(cur.select(F.col("id").alias("dst"), F.col("color").alias("nc")), a_cnt), "dst")
                 .groupBy("src")
                 .agg(F.max("nc").alias("nmax"))
                 .select(F.col("src").alias("id"), "nmax")
             )
-            c1 = cur.join(_bc(nbr, a_cnt), "id", "left").select(
+            c1 = cur.join(bc(nbr, a_cnt), "id", "left").select(
                 "id", F.greatest(F.col("color"), F.coalesce(F.col("nmax"), F.col("color"))).alias("color")
             )
             obs = Observation(f"col_{rnd}_{it}")
@@ -210,17 +197,15 @@ def scc_coloring(
 
         # ---- forward BFS from roots within color class -> SCCs --------
         ce = (
-            re.join(_bc(col_df.select(F.col("id").alias("src"), F.col("color").alias("sc")), a_cnt), "src")
-            .join(_bc(col_df.select(F.col("id").alias("dst"), F.col("color").alias("dc")), a_cnt), "dst")
+            re.join(bc(col_df.select(F.col("id").alias("src"), F.col("color").alias("sc")), a_cnt), "src")
+            .join(bc(col_df.select(F.col("id").alias("dst"), F.col("color").alias("dc")), a_cnt), "dst")
             .where(F.col("sc") == F.col("dc"))
             .select("src", "dst")
         )
-        # persisted + partitioned by the hop dedup key (dst): while the
-        # frontier broadcasts, each BFS hop's distinct is exchange-free
-        ce, _ = runner.tick(
-            "ce", ce.repartition(_part_target(re_cnt), "dst"),
-            truncate=False, count=False, detach=False,
-        )
+        # keyed by the hop dedup key (dst) in both regimes: a frontier
+        # still broadcasts when its class is small, whatever a_cnt is, and
+        # then each BFS hop's distinct is exchange-free
+        ce = runner.keyed("ce", ce, a_cnt, "dst", "dst", parts=part_target(re_cnt))
         # visited set = compacted base + materialized per-hop fragments
         # (lazy union, one tick per hop — operators/bfs.py discipline)
         seed, v_cnt = runner.tick(
@@ -237,7 +222,7 @@ def scc_coloring(
                 raise RuntimeError("coloring BFS exceeded max hops")
             runner.bump("BWD_iterations")
             new = (
-                ce.join(_bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
+                ce.join(bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
                 .select(F.col("dst").alias("id"))
                 .distinct()
                 .join(vis_view, "id", "left_anti")
@@ -257,12 +242,13 @@ def scc_coloring(
 
         runner.log("class_bfs_done", hops=hops)
         # retired = visited; scc label = min member id per color class
-        retired = vis_view.join(_bc(col_df, a_cnt), "id")
+        retired = vis_view.join(bc(col_df, a_cnt), "id")
         reps = retired.groupBy("color").agg(F.min("id").alias("scc_id"))
-        emit_done(retired.join(_bc(reps, a_cnt), "color").select("id", "scc_id"))
+        emit_done(retired.join(bc(reps, a_cnt), "color").select("id", "scc_id"))
         active, a_cnt = runner.tick("active", active.join(vis_view, "id", "left_anti"))
         runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prev_iters, bfs_hops=hops)
         for s in ("color", "ce", "vis_base", "prop_re", *frag_slots):
             runner.release(s)
 
+    runner.finish(*(f"done_{i}" for i in range(len(done_frags))))
     return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))

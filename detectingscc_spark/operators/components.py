@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc
+from ..plans.superstep import SuperstepRunner, bc
 
 
 def connected_components(
@@ -43,22 +42,12 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    from .scc import BROADCAST_ROW_LIMIT, _part_target
-
     lab = verts.select("id", F.col("id").alias("label"))
     lab, n_verts = runner.tick("label", lab)
 
-    # In the broadcast regime (label frame under the broadcast limit) the
-    # pull join is broadcast-hash, so partitioning the PERSISTED edge
-    # frame by the pull's AGG key (src) carries through the join and
-    # makes every iteration's aggregation exchange-free (persist — unlike
-    # localCheckpoint — preserves partitioning). Past it the pull is a
-    # sort-merge join on dst, where dst partitioning saves reshuffling
-    # the edge table every iteration instead.
-    und_key = "src" if n_verts <= BROADCAST_ROW_LIMIT else "dst"
-    und, _ = runner.tick(
-        "edges", und.repartition(und_key), truncate=False, count=False, detach=False
-    )
+    # keyed by the pull's agg key (src) while labels broadcast, by the
+    # pull join's key (dst) past the limit
+    und = runner.keyed("edges", und, n_verts, "src", "dst")
     prev_sum = None  # labels monotone non-increasing; sum fixpoint = converged
 
     for i in range(max_iters):
@@ -74,7 +63,7 @@ def connected_components(
         cur = lab
         for _j in range(2):
             cur = cur.join(
-                _bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), n_verts),
+                bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), n_verts),
                 "label",
                 "left",
             ).select(
@@ -82,12 +71,12 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"),
             )
         nbr = (
-            und.join(_bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), n_verts), "dst")
+            und.join(bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), n_verts), "dst")
             .groupBy("src")
             .agg(F.min("nl").alias("nmin"))
             .select(F.col("src").alias("id"), "nmin")
         )
-        l1 = cur.join(_bc(nbr, n_verts), "id", "left").select(
+        l1 = cur.join(bc(nbr, n_verts), "id", "left").select(
             "id", F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label")
         )
         # convergence sum rides as an observed metric of the tick's own
@@ -100,9 +89,8 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    result = lab.select("id", F.col("label").alias("cc_id"))
-    runner.release("edges")
-    return result
+    runner.finish("label")
+    return lab.select("id", F.col("label").alias("cc_id"))
 
 
 def bipartiteness(

@@ -59,9 +59,8 @@ def transitive_closure(
             break
     else:
         raise RuntimeError(f"transitive_closure: no fixpoint within max_rounds={max_rounds}")
-    result = r
-    runner.release("reach")
-    return result
+    runner.finish("reach")
+    return r
 
 
 def dag_reachability(
@@ -112,7 +111,7 @@ def dag_layers(
     dag = dag_edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     ).distinct()
-    dag, _ = runner.tick("dag", dag.repartition("src"), detach=False)
+    dag, _ = runner.tick("dag", dag, detach=False)
     universe = dag.select(F.col("src").alias("id")).union(dag.select(F.col("dst").alias("id")))
     if comps is not None:
         universe = universe.union(comps.select(F.col("id").cast("long")))
@@ -146,6 +145,5 @@ def dag_layers(
             f"dag_layers: no fixpoint within max_rounds={max_rounds} "
             "(cycle in the input, or a deeper DAG than the guard allows)"
         )
-    result = layers
-    runner.release("dag")
-    return result
+    runner.finish("layers")
+    return layers

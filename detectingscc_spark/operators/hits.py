@@ -31,9 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .scc import BROADCAST_ROW_LIMIT
+from ..plans.superstep import SuperstepRunner
 
 
 def _normalized(v: DataFrame, raw: DataFrame, total: DataFrame, out: str) -> DataFrame:
@@ -45,28 +44,55 @@ def _normalized(v: DataFrame, raw: DataFrame, total: DataFrame, out: str) -> Dat
     )
 
 
-def _keyed_copies(e: DataFrame) -> dict[str, DataFrame]:
-    """Persist the edge table twice, hash-partitioned by src and by dst —
-    the dual forward/backward adjacency layout the reference itself
-    keeps. persist (unlike localCheckpoint) preserves partitioning, so a
-    half-step that broadcast-joins the score side and aggregates on the
-    copy's key plans its aggregation exchange-free; past the broadcast
-    regime the copy keyed by the JOIN key keeps the edge table from
-    reshuffling. Cost: the edge bytes twice, the CSR+CSC trade."""
-    out = {}
-    for key in ("src", "dst"):
-        c = e.repartition(key).persist(StorageLevel.MEMORY_AND_DISK)
-        c.write.format("noop").mode("overwrite").save()
-        out[key] = c
-    return out
+def _push(runner: SuperstepRunner, slot: str, ek: DataFrame, raw_prev: DataFrame,
+          total_prev: DataFrame | None, key_in: str, key_out: str, w: str | None = None):
+    """One matrix application: raw_out(v) = Σ_{edges} (raw_prev(u)/t)·w.
+    The division by the carried normalizer happens per edge row — the
+    identical double op the round-6 materialized-scores form applied per
+    vertex — so sums see bit-identical terms; SALSA's weight `w` follows
+    in the same div-then-mul order. Seed half-step (total_prev None):
+    scores are already normalized. ONE driver action: the tick of the
+    raw push into `slot` (the normalizer and the next half-step both
+    read it), which frees the same slot's push from the previous
+    iteration."""
+    j = ek.join(raw_prev.withColumnRenamed("id", key_in), key_in)
+    if total_prev is None:
+        s = F.col("raw")
+    else:
+        j = j.crossJoin(F.broadcast(total_prev))
+        s = F.col("raw") / F.col("t")
+    if w is not None:
+        s = s * F.col(w)
+    raw, _ = runner.tick(
+        slot, j.groupBy(F.col(key_out).alias("id")).agg(F.sum(s).alias("raw")),
+        count=False, detach=False,
+    )
+    return raw, raw.agg(F.sum("raw").alias("t"))
 
 
-def _unpersist_copies(copies: dict[str, DataFrame]) -> None:
-    for c in copies.values():
-        try:
-            c.unpersist()
-        except Exception:
-            pass
+def _power(spark: SparkSession, run_id: str, e: DataFrame, v: DataFrame, n: int,
+           iters: int, w_auth: str | None = None, w_hub: str | None = None) -> DataFrame:
+    """(id, auth, hub) after `iters` synchronous auth/hub half-step pairs.
+
+    The edge table is persisted twice, the dual forward/backward
+    adjacency layout the reference itself keeps (the CSR+CSC trade): the
+    auth half-step (join src, aggregate dst) and the hub half-step (join
+    dst, aggregate src) each read their own copy, keyed for that
+    half-step by `SuperstepRunner.keyed` in either regime."""
+    runner = SuperstepRunner(spark, run_id=run_id)
+    auth_e = runner.keyed("auth_edges", e, n, "dst", "src")
+    hub_e = runner.keyed("hub_edges", e, n, "src", "dst")
+    seed = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
+    hub_raw, h_t = seed, None
+    for _ in range(iters):
+        auth_raw, a_t = _push(runner, "auth_raw", auth_e, hub_raw, h_t, "src", "dst", w_auth)
+        hub_raw, h_t = _push(runner, "hub_raw", hub_e, auth_raw, a_t, "dst", "src", w_hub)
+    runner.finish("auth_raw", "hub_raw")
+    return (
+        _normalized(v, auth_raw, a_t, "auth")
+        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
+        .select("id", "auth", "hub")
+    )
 
 
 def hits(
@@ -92,50 +118,7 @@ def hits(
         # ANSI mode constant-folds the 1/n seed at plan time, so an empty
         # universe must short-circuit rather than build a 1/0 literal
         return v.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-
-    ecopies = _keyed_copies(e)
-    bcast_mode = n <= BROADCAST_ROW_LIMIT
-
-    def _push(raw_prev: DataFrame, total_prev: DataFrame | None,
-              key_in: str, key_out: str):
-        """One matrix application: raw_out(v) = Σ_{edges} raw_prev(u)/t.
-        The division by the carried normalizer happens per edge row —
-        the identical double op the round-6 materialized-scores form
-        applied per vertex — so sums see bit-identical terms. Seed
-        half-step (total_prev None): scores are already normalized.
-        ONE driver action: the eager checkpoint of the raw push (the
-        normalizer and the next half-step both read it). The edge copy
-        keyed by the AGG key makes the aggregation exchange-free while
-        the score side broadcasts; past that, the JOIN-key copy keeps
-        the edge table from reshuffling."""
-        ek = ecopies[key_out] if bcast_mode else ecopies[key_in]
-        j = ek.join(raw_prev.withColumnRenamed("id", key_in), key_in)
-        if total_prev is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total_prev))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col(key_out).alias("id"))
-            .agg(F.sum(s).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
-        return raw, total
-
-    seed = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
-    auth_raw = hub_raw = None
-    a_t = h_t = None
-    for k in range(iters):
-        auth_raw, a_t = _push(hub_raw if k else seed, h_t if k else None, "src", "dst")
-        hub_raw, h_t = _push(auth_raw, a_t, "dst", "src")
-    # safe to release: the result plan reads only v and the checkpointed
-    # raw frames, never the edge copies
-    _unpersist_copies(ecopies)
-    return (
-        _normalized(v, auth_raw, a_t, "auth")
-        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
-        .select("id", "auth", "hub")
-    )
+    return _power(spark, "hits", e, v, n, iters)
 
 
 def eigencentrality(
@@ -161,30 +144,15 @@ def eigencentrality(
         # see hits(): the 1/n seed would constant-fold to 1/0 under ANSI
         return v.select("id", F.lit(0.0).alias("score"))
     # persist the symmetrized table once (it was re-derived — distinct +
-    # union — every iteration), keyed by the agg key in the broadcast
-    # regime so each iteration's aggregation is exchange-free, by the
-    # join key past it
-    sym_key = "w" if n <= BROADCAST_ROW_LIMIT else "u"
-    sym = sym.repartition(sym_key).persist(StorageLevel.MEMORY_AND_DISK)
-    sym.write.format("noop").mode("overwrite").save()
+    # union — every iteration), keyed by the agg key while the scores
+    # broadcast, by the join key past the limit
+    runner = SuperstepRunner(spark, run_id="eigencentrality")
+    sym = runner.keyed("sym", sym, n, "w", "u")
     raw = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
     total = None
-    for k in range(iters):
-        j = sym.join(raw.withColumnRenamed("id", "u"), "u")
-        if total is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col("w").alias("id"))
-            .agg(F.sum(s).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
-    try:
-        sym.unpersist()
-    except Exception:
-        pass
+    for _ in range(iters):
+        raw, total = _push(runner, "raw", sym, raw, total, "u", "w")
+    runner.finish("raw")
     return _normalized(v, raw, total, "score")
 
 
@@ -230,39 +198,4 @@ def salsa(
     if n == 0:
         # see hits(): the 1/n seed would constant-fold to 1/0 under ANSI
         return v.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-    ecopies = _keyed_copies(ew)
-    bcast_mode = n <= BROADCAST_ROW_LIMIT
-
-    def _wpush(raw_prev: DataFrame, total_prev: DataFrame | None,
-               key_in: str, key_out: str, w: str):
-        """Weighted half-step: the per-edge term is (raw/t)*w — the same
-        div-then-mul order as the round-6 materialized s*w form. Edge
-        copy choice: agg key in the broadcast regime, join key past it
-        (see _keyed_copies)."""
-        ek = ecopies[key_out] if bcast_mode else ecopies[key_in]
-        j = ek.join(raw_prev.withColumnRenamed("id", key_in), key_in)
-        if total_prev is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total_prev))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col(key_out).alias("id"))
-            .agg(F.sum(s * F.col(w)).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
-        return raw, total
-
-    seed = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
-    auth_raw = hub_raw = None
-    a_t = h_t = None
-    for k in range(iters):
-        auth_raw, a_t = _wpush(hub_raw if k else seed, h_t if k else None,
-                               "src", "dst", "w_out")
-        hub_raw, h_t = _wpush(auth_raw, a_t, "dst", "src", "w_in")
-    _unpersist_copies(ecopies)
-    return (
-        _normalized(v, auth_raw, a_t, "auth")
-        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
-        .select("id", "auth", "hub")
-    )
+    return _power(spark, "salsa", ew, v, n, iters, "w_out", "w_in")

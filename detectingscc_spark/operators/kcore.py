@@ -55,7 +55,7 @@ def kcore(
     """
     runner = runner or SuperstepRunner(spark, run_id=f"kcore{k}")
     und = undirected_edges(edges)
-    und, _ = runner.tick("und", und.repartition("a"), detach=False)
+    und, _ = runner.tick("und", und, detach=False)
     alive = und.select(F.col("a").alias("id")).union(und.select(F.col("b").alias("id"))).distinct()
     alive, n_alive = runner.tick("alive", alive)
 
@@ -99,7 +99,5 @@ def kcore(
     else:
         if rounds is None:
             raise RuntimeError(f"kcore: no fixpoint within max_rounds={max_rounds}")
-    result = alive.select("id")
-    runner.release("und")
-    runner.release("resid")
-    return result
+    runner.finish("alive")
+    return alive.select("id")

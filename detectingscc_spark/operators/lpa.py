@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc
+from ..plans.superstep import SuperstepRunner, bc
 
 
 def label_propagation(
@@ -44,18 +43,10 @@ def label_propagation(
     lab = verts.select("id", F.col("id").alias("label"))
     lab, n_verts = runner.tick("label", lab)
 
-    # broadcast regime: the vote join is broadcast-hash, so a PERSISTED
-    # edge frame partitioned by the vote aggs' key (dst) makes both
-    # per-round aggregations exchange-free (persist preserves
-    # partitioning; localCheckpoint does not). Past the broadcast limit
-    # the join is sort-merge on src — partition by src there so rounds
-    # never reshuffle the edge table.
-    from .scc import BROADCAST_ROW_LIMIT
-
-    und_key = "dst" if n_verts <= BROADCAST_ROW_LIMIT else "src"
-    und, _ = runner.tick(
-        "edges", und.repartition(und_key), truncate=False, count=False, detach=False
-    )
+    # keyed by the vote aggs' key (dst) while labels broadcast — both
+    # per-round aggregations are then exchange-free — by the vote join's
+    # key (src) past the limit
+    und = runner.keyed("edges", und, n_verts, "dst", "src")
 
     for i in range(rounds):
         runner.superstep = i + 1
@@ -65,17 +56,17 @@ def label_propagation(
         # is partitioned by dst, which also satisfies both vote aggs'
         # clustering, so a broadcast-joined round runs exchange-free
         votes = (
-            und.join(_bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
+            und.join(bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
             .groupBy("dst", "nl")
             .agg(F.count("*").alias("c"))
             .groupBy("dst")
             .agg(F.expr("max_by(nl, struct(c, -nl))").alias("winner"))
             .select(F.col("dst").alias("id"), "winner")
         )
-        new_lab = lab.join(_bc(votes, n_verts), "id", "left").select(
+        new_lab = lab.join(bc(votes, n_verts), "id", "left").select(
             "id", F.coalesce(F.col("winner"), F.col("label")).alias("label")
         )
         lab, _ = runner.tick("label", new_lab, count=False)
         runner.log("lpa_round")
-    runner.release("edges")
+    runner.finish("label")
     return lab.select("id", "label")

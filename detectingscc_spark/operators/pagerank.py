@@ -7,10 +7,12 @@ Dangling mass (vertices with outdeg 0) is redistributed uniformly, so
 Σ rank = 1 at every step. Converges to allclose(1e-6) vs a dense numpy
 power-iteration oracle (tests/test_pagerank.py).
 
-Scale notes: `contrib` is the one shuffle per iteration (groupBy dst);
-edges are pre-partitioned by src and carry out_deg folded in so each
-iteration joins rank (N rows) once with edges and aggregates. Dangling
-mass is a scalar agg. Lineage truncated per iteration via the runner.
+Scale notes: edges carry 1/out_deg folded in and are persisted once,
+keyed by `SuperstepRunner.keyed` (dst while the rank frame broadcasts —
+the contrib groupBy(dst) is then exchange-free — src past the limit), so
+each iteration joins rank (N rows) once with edges and aggregates.
+Dangling mass is a scalar agg. Lineage truncated per iteration via the
+runner.
 """
 
 from __future__ import annotations
@@ -18,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import BROADCAST_ROW_LIMIT, _bc
+from ..plans.superstep import SuperstepRunner, bc
 
 
 def pagerank(
@@ -56,16 +57,11 @@ def pagerank(
     verts = verts.select("id", (~F.col("has_out")).alias("dang"))
     verts, n = runner.tick("verts", verts, detach=False)
 
-    # fold outdeg into the edge table once: each edge carries 1/outdeg(src).
-    # Broadcast regime (rank frame under the limit): the contrib join is
-    # broadcast-hash, so the PERSISTED edge frame partitioned by the
-    # contrib agg's key (dst) makes the per-iteration aggregation
-    # exchange-free (persist preserves partitioning; localCheckpoint does
-    # not). Past the limit the join is sort-merge on src — partition by
-    # src there so iterations shuffle only the rank side.
+    # fold outdeg into the edge table once: each edge carries 1/outdeg(src),
+    # keyed by the contrib agg's key (dst) while the rank frame
+    # broadcasts, by the contrib join's key (src) past the limit
     Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    ew_key = "dst" if n <= BROADCAST_ROW_LIMIT else "src"
-    Ew, _ = runner.tick("edges", Ew.repartition(ew_key), truncate=False, count=False, detach=False)
+    Ew = runner.keyed("edges", Ew, n, "dst", "src")
 
     rank = verts.select("id", (F.lit(1.0) / F.lit(n)).alias("rank"), "dang")
     rank, _ = runner.tick("rank", rank)
@@ -84,13 +80,13 @@ def pagerank(
         # past the limit the join falls back to shuffling ONLY the rank
         # side (Ew stays partitioned by the join key src)
         contrib = (
-            Ew.join(_bc(rank.select("id", "rank"), n).withColumnRenamed("id", "src"), "src")
+            Ew.join(bc(rank.select("id", "rank"), n).withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
             .select(F.col("dst").alias("id"), "c")
         )
         new_rank = (
-            verts.join(_bc(contrib, n), "id", "left")
+            verts.join(bc(contrib, n), "id", "left")
             .crossJoin(F.broadcast(dm))
             .select(
                 "id",
@@ -119,10 +115,8 @@ def pagerank(
             runner.promote("rank_next", "rank")
             rank = new_rank
         runner.maybe_checkpoint({"rank": rank})
-    result = rank.select("id", "rank")
-    for s in ("verts", "edges"):
-        runner.release(s)
-    return result
+    runner.finish("rank")
+    return rank.select("id", "rank")
 
 
 def personalized_pagerank(
@@ -184,10 +178,7 @@ def personalized_pagerank(
     vp, n_v = runner.tick("verts", vp, detach=False)
 
     Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    # same partitioning policy as pagerank(): agg key (dst) in the
-    # broadcast regime, join key (src) past it
-    ew_key = "dst" if n_v <= BROADCAST_ROW_LIMIT else "src"
-    Ew, _ = runner.tick("edges", Ew.repartition(ew_key), truncate=False, count=False, detach=False)
+    Ew = runner.keyed("edges", Ew, n_v, "dst", "src")
 
     rank = vp.select("id", F.col("p").alias("rank"), "dang")
     rank, _ = runner.tick("rank", rank)
@@ -200,13 +191,13 @@ def personalized_pagerank(
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
         contrib = (
-            Ew.join(_bc(rank.select("id", "rank"), n_v).withColumnRenamed("id", "src"), "src")
+            Ew.join(bc(rank.select("id", "rank"), n_v).withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
             .select(F.col("dst").alias("id"), "c")
         )
         new_rank = (
-            vp.join(_bc(contrib, n_v), "id", "left")
+            vp.join(bc(contrib, n_v), "id", "left")
             .crossJoin(F.broadcast(dm))
             .select(
                 "id",
@@ -221,7 +212,5 @@ def personalized_pagerank(
         new_rank, _ = runner.tick("rank_next", new_rank, count=False)
         runner.promote("rank_next", "rank")
         rank = new_rank
-    result = rank.select("id", "rank")
-    for s in ("verts", "edges"):
-        runner.release(s)
-    return result
+    runner.finish("rank")
+    return rank.select("id", "rank")

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.superstep import SuperstepRunner
 from .scc import _tarjan_local, strongly_connected_components
 
 
@@ -148,10 +149,13 @@ def scc_partitioned(
     # materialize the contraction once: the global engine's setup reads
     # its edge input several times (canonicalize, vertex derivation,
     # round-1 residual) and would otherwise re-run the two label joins
-    # + distinct per read
-    condensed = condensed.localCheckpoint(eager=True)
+    # + distinct per read. Released once the global engine returns: its
+    # output is materialized.
+    own = SuperstepRunner(spark, run_id="partitioned")
+    condensed, _ = own.tick("condensed", condensed, count=False, detach=False)
     cond_verts = local.select(F.col("lbl").alias("id")).distinct()
     global_scc = strongly_connected_components(spark, condensed, cond_verts, **scc_kwargs)
+    own.finish()
 
     # ---- map back -----------------------------------------------------
     out = (

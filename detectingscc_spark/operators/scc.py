@@ -39,9 +39,9 @@ Superstep fixed-cost discipline (the scaling-efficiency levers):
     so fused multi-hop windows recompute every inner level once per
     outer level (measured slower at every size, BASELINE.md).
   * Frontier joins and visited anti-joins broadcast while the driver-
-    known row count is under BROADCAST_ROW_LIMIT; past it they are plain
-    shuffle joins, and AQE skew-join splitting spreads hub adjacency
-    (per-hub salting measured slower, BASELINE.md).
+    known row count is under BROADCAST_ROW_LIMIT (plans/superstep.py);
+    past it they are plain shuffle joins, and AQE skew-join splitting
+    spreads hub adjacency (per-hub salting measured slower, BASELINE.md).
   * Retired vertices accumulate as materialized fragments; the `done`
     set is their lazy union (no O(done) rewrite per emit).
   * trim1 re-derives the residual lazily per iteration and materializes
@@ -55,23 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-
-# (dir,id) rows ~16B each -> <=24MB broadcast. The same cap bounds the
-# BFS visited-set anti-join, whose build side GROWS every hop: at a 300k
-# cap a round-7 order-alternated A/B at 4x bench scale (941k edges, vis
-# peaking ~800k rows) measured the shuffle anti-join it falls back to —
-# which sort-merges level AND vis every hop — ~10% SLOWER end to end than
-# broadcasting up to this byte bound. Past it the anti-join still
-# shuffles (AQE-sized), keeping data motion on the executors.
-BROADCAST_ROW_LIMIT = 1_500_000
-
-
-def _bc(df: DataFrame, cnt: int | None) -> DataFrame:
-    """Broadcast hint for driver-known-small frames (frontiers, pivots)."""
-    if cnt is not None and cnt <= BROADCAST_ROW_LIMIT:
-        return F.broadcast(df)
-    return df
+from ..plans.superstep import SuperstepRunner, bc, part_target
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -221,8 +205,8 @@ def strongly_connected_components(
             raise RuntimeError(f"SCC did not converge in {max_rounds} rounds")
 
         def refresh_residual(re, active, a_cnt):
-            a_src = _bc(active, a_cnt).select(F.col("id").alias("src"), F.col("range").alias("srange"))
-            a_dst = _bc(active, a_cnt).select(F.col("id").alias("dst"), F.col("range").alias("drange"))
+            a_src = bc(active, a_cnt).select(F.col("id").alias("src"), F.col("range").alias("srange"))
+            a_dst = bc(active, a_cnt).select(F.col("id").alias("dst"), F.col("range").alias("drange"))
             return runner.tick(
                 "re",
                 re.select("src", "dst")
@@ -291,7 +275,7 @@ def strongly_connected_components(
             .agg((F.sum("o") * F.sum(1 - F.col("o"))).alias("prod"))
         )
         pivots = (
-            active.join(_bc(degs, a_cnt), "id", "left")
+            active.join(bc(degs, a_cnt), "id", "left")
             .select("id", "range", F.coalesce("prod", F.lit(0)).alias("prod"))
             .groupBy("range")
             .agg(F.expr("max_by(id, struct(prod, -id))").alias("pivot"))
@@ -305,7 +289,7 @@ def strongly_connected_components(
         # assembled-state tick) materializes its own derivation — a
         # dedicated state tick was one more job per round for nothing
         state = active.join(
-            _bc(pivots, p_cnt).select(F.col("range"), F.col("pivot")), "range", "left"
+            bc(pivots, p_cnt).select(F.col("range"), F.col("pivot")), "range", "left"
         ).select(
             "id",
             "range",
@@ -319,13 +303,13 @@ def strongly_connected_components(
         # ---- update: FW∩BW = pivot's SCC; survivors re-ranged ---------
         in_scc = state.where(F.col("fw") & F.col("bw"))
         reps = in_scc.groupBy("range").agg(F.min("id").alias("scc_id"))
-        emit_done(in_scc.join(_bc(reps, p_cnt), "range").select("id", "scc_id"))
+        emit_done(in_scc.join(bc(reps, p_cnt), "range").select("id", "scc_id"))
 
         surv = state.where(~(F.col("fw") & F.col("bw"))).withColumn(
             "sub", F.when(F.col("fw"), 1).when(F.col("bw"), 2).otherwise(0)
         )
         regroup = surv.groupBy("range", "sub").agg(F.min("id").alias("new_range"))
-        active = surv.join(_bc(regroup, None), ["range", "sub"]).select(
+        active = surv.join(bc(regroup, None), ["range", "sub"]).select(
             "id", F.col("new_range").alias("range")
         )
         active, a_cnt = runner.tick("active", active)
@@ -335,6 +319,7 @@ def strongly_connected_components(
         runner.release("pivots")
 
     runner.maybe_checkpoint({"active": active, "done": all_done(), "re": re}, force=True)
+    runner.finish(*(f"done_{i}" for i in range(len(done_frags))))
     return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))
 
 
@@ -353,20 +338,6 @@ def _assemble_state(runner, state, vis_f, vis_b):
     )
     out, _ = runner.tick("state", out, count=False)
     return out
-
-
-def _part_target(rows: int | None, spark=None, bytes_per_row: int = 24) -> int:
-    """Partition count sized by DATA VOLUME (~16MB each), capped at the
-    session's shuffle parallelism — cached iterative state should never
-    carry core-count partitions when the bytes don't warrant them (the
-    tiny-task flood is pure scheduler overhead at any cluster size)."""
-    if rows is None:
-        return 1
-    from pyspark.sql import SparkSession
-
-    spark = spark or SparkSession.getActiveSession()
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32")) if spark else 32
-    return max(1, min(cap, (rows * bytes_per_row) // (16 << 20) + 1))
 
 
 def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active=None):
@@ -388,21 +359,15 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active=None):
     )
     # While the frontier stays broadcast-able (bounded by the active
     # count), every hop's joins are broadcast-hash and the only exchange
-    # left is the frontier dedup — so partition the cached edge frame by
-    # the DEDUP key (dir, v): persist (unlike localCheckpoint) preserves
-    # the partitioning, the broadcast join and the select carry it
-    # through, and the per-hop distinct becomes exchange-free. Past the
-    # broadcast regime the hops are shuffle joins on (dir, u) and key
-    # partitioning buys nothing — keep the byte-sized coalesce so per-hop
-    # scans cost O(data) tasks.
-    n_parts_ed = _part_target(2 * re_cnt if re_cnt else None)
-    if n_active is not None and n_active <= BROADCAST_ROW_LIMIT:
-        ed = ed.repartition(n_parts_ed, "dir", "v")
-    else:
-        ed = ed.coalesce(n_parts_ed)
-    ed, _ = runner.tick(
-        "bfs_ed", ed,
-        truncate=False, count=False, detach=False,
+    # left is the frontier dedup — so key the cached edge frame by the
+    # DEDUP key (dir, v) and the per-hop distinct is exchange-free. Past
+    # the broadcast regime the hops are shuffle joins on (dir, u), and a
+    # key at byte-sized partition counts (below the shuffle parallelism)
+    # would be reshuffled anyway — keep the unkeyed byte-sized coalesce
+    # so per-hop scans cost O(data) tasks.
+    ed = runner.keyed(
+        "bfs_ed", ed, n_active, ("dir", "v"), None,
+        parts=part_target(2 * re_cnt if re_cnt else None),
     )
 
     seeds = state.where("fw").select(F.lit(0).alias("dir"), "id").unionByName(
@@ -423,10 +388,10 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active=None):
         runner.bump("FWD_iterations")
         runner.bump("BWD_iterations")
         new = (
-            ed.join(_bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
+            ed.join(bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
             .select("dir", F.col("v").alias("id"))
             .distinct()
-            .join(_bc(vis, vis_cnt), ["dir", "id"], "left_anti")
+            .join(bc(vis, vis_cnt), ["dir", "id"], "left_anti")
         )
         new, cnt = runner.tick(f"bfs_new_{hops}", new, detach=False)
         if cnt:
@@ -473,7 +438,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
         iters += 1
         runner.bump("Trimm_iterations")
         if trimmed_any:
-            sv = _bc(active, a_cnt).select("id")
+            sv = bc(active, a_cnt).select("id")
             cur = re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
                 sv.withColumnRenamed("id", "dst"), "dst", "left_semi"
             )
@@ -498,7 +463,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
         if trimmed_cnt == 0:
             break
     if trimmed_any:
-        sv = _bc(active, a_cnt).select("id")
+        sv = bc(active, a_cnt).select("id")
         re, re_cnt = runner.tick(
             "re",
             re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
@@ -545,7 +510,7 @@ def _trim2(runner, re, re_cnt, active, a_cnt, emit_done):
     emit_done(retired)
     active, a_cnt = runner.tick("active_next", active.join(retired.select("id"), "id", "left_anti"))
     runner.promote("active_next", "active")
-    rt = _bc(retired, r_cnt).select("id")
+    rt = bc(retired, r_cnt).select("id")
     re, re_cnt = runner.tick(
         "re",
         re.join(rt.withColumnRenamed("id", "src"), "src", "left_anti").join(
@@ -576,12 +541,9 @@ def _decompose(runner, re, active, a_cnt, iters):
     und = re.select("src", "dst").unionByName(
         re.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # broadcast regime: partition by the pull's AGG key (src) so the
-    # persisted frame's partitioning rides through the broadcast join and
-    # the per-iteration aggregation is exchange-free; past it, partition
-    # by the join key (dst) so iterations never reshuffle the edges
-    und_key = "src" if a_cnt <= BROADCAST_ROW_LIMIT else "dst"
-    und, _ = runner.tick("dec_edges", und.repartition(und_key), truncate=False, detach=False)
+    # keyed by the pull's agg key (src) while labels broadcast, by its
+    # join key (dst) past the limit
+    und = runner.keyed("dec_edges", und, a_cnt, "src", "dst")
 
     from pyspark.sql import Observation
 
@@ -591,7 +553,7 @@ def _decompose(runner, re, active, a_cnt, iters):
         cur = lab
         for _j in range(2):
             cur = cur.join(
-                _bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), a_cnt),
+                bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), a_cnt),
                 "label",
                 "left",
             ).select(
@@ -599,12 +561,12 @@ def _decompose(runner, re, active, a_cnt, iters):
                 F.least(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"),
             )
         nbr = (
-            und.join(_bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), a_cnt), "dst")
+            und.join(bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), a_cnt), "dst")
             .groupBy("src")
             .agg(F.min("nl").alias("nmin"))
             .select(F.col("src").alias("id"), "nmin")
         )
-        lab1 = cur.join(_bc(nbr, a_cnt), "id", "left").select(
+        lab1 = cur.join(bc(nbr, a_cnt), "id", "left").select(
             "id", F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label")
         )
         # convergence sum rides along as an observed metric of the tick's

@@ -9,6 +9,28 @@ every round — otherwise the logical plan grows without bound (the classic
 iterative-Spark failure mode). `SuperstepRunner.tick` encapsulates exactly
 that.
 
+The runner owns every frame an operator caches, in named slots:
+  * `tick` stores a localCheckpoint (or, truncate=False, a persisted
+    frame); `keyed` persists a loop-invariant edge frame partitioned by
+    the one broadcast-vs-shuffle policy below.
+  * Release really frees: a persisted slot is unpersisted, and a
+    checkpointed slot frees the checkpoint RDD itself (a localCheckpoint
+    frame is not in the CacheManager, so `DataFrame.unpersist` would be
+    a no-op). A frame that reads a released checkpoint fails loudly
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); errors propagate.
+  * An operator ends with `finish(*result_slots)`: the slots its
+    returned frame reads are handed over to that result (forgotten, not
+    freed), every other slot is released. No cached frame outlives the
+    result it backs.
+
+Broadcast-vs-shuffle policy (one place for every operator): a frame whose
+driver-known row count is within BROADCAST_ROW_LIMIT is broadcast (`bc`);
+an edge frame joined against such a frame every iteration is keyed by the
+iteration's AGGREGATION key (the broadcast join keeps its partitioning, so
+the aggregation is exchange-free), otherwise by the JOIN key (iterations
+shuffle only the other side). persist keeps a partitioning;
+localCheckpoint drops it.
+
 Durable checkpoints (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics") write the live state through a
 pluggable Spark datasource format (default parquet) plus a JSON manifest
@@ -41,6 +63,46 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+# (dir,id) rows ~16B each -> <=24MB broadcast. The same cap bounds the
+# SCC BFS visited-set anti-join, whose build side GROWS every hop: at a
+# 300k cap a round-7 order-alternated A/B at 4x bench scale (941k edges,
+# vis peaking ~800k rows) measured the shuffle anti-join it falls back to
+# — which sort-merges level AND vis every hop — ~10% SLOWER end to end
+# than broadcasting up to this byte bound. Past it the anti-join still
+# shuffles (AQE-sized), keeping data motion on the executors.
+BROADCAST_ROW_LIMIT = 1_500_000
+
+
+def bc(df: DataFrame, rows: int | None) -> DataFrame:
+    """Broadcast hint for a frame whose driver-known row count is within
+    BROADCAST_ROW_LIMIT (frontiers, pivots, label/rank state)."""
+    if rows is not None and rows <= BROADCAST_ROW_LIMIT:
+        return F.broadcast(df)
+    return df
+
+
+def part_target(rows: int | None) -> int:
+    """Partition count sized by DATA VOLUME (~16MB of 24-byte rows each),
+    capped at the session's shuffle parallelism — cached iterative state
+    should never carry core-count partitions when the bytes don't warrant
+    them (the tiny-task flood is pure scheduler overhead at any cluster
+    size)."""
+    if rows is None:
+        return 1
+    spark = SparkSession.getActiveSession()
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32")) if spark else 32
+    return max(1, min(cap, (rows * 24) // (16 << 20) + 1))
+
+
+def _free(df: DataFrame) -> None:
+    """Drop a slot's blocks. A persisted frame leaves the CacheManager; a
+    localCheckpoint frame's blocks belong to its LogicalRDD's RDD, which
+    DataFrame.unpersist never reaches."""
+    if df.is_cached:
+        df.unpersist()
+    else:
+        df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 class SuperstepRunner:
@@ -139,11 +201,39 @@ class SuperstepRunner:
             old = self._live.get(name)
             self._live[name] = new
         if old is not None:
-            old.unpersist()
+            _free(old)
         if detach:
             return self._detach(new), cnt
         # fresh expression ids only (no stats reset, no conversion cost)
         return new.select([F.col(c).alias(c) for c in new.columns]), cnt
+
+    def keyed(
+        self,
+        name: str,
+        df: DataFrame,
+        rows: int | None,
+        agg: str | tuple[str, ...],
+        join: str | tuple[str, ...] | None,
+        parts: int | None = None,
+    ) -> DataFrame:
+        """Persist the loop-invariant edge frame `df` as slot `name`, keyed
+        for the per-iteration join against a frame of `rows` rows.
+
+        Within BROADCAST_ROW_LIMIT that join broadcasts and the frame is
+        hash-partitioned by `agg`, the key the iteration aggregates on
+        after the join (exchange-free aggregation); past it the frame is
+        partitioned by `join` (the shuffle join moves only the other
+        side), or, with join=None, left unkeyed and coalesced to `parts`.
+        `parts` fixes the partition count (default: the session's shuffle
+        partitions, AQE-coalesced). No row count: one noop-write job."""
+        key = agg if rows is not None and rows <= BROADCAST_ROW_LIMIT else join
+        if key is None:
+            df = df.coalesce(parts)
+        else:
+            cols = [key] if isinstance(key, str) else list(key)
+            df = df.repartition(parts, *cols) if parts else df.repartition(*cols)
+        out, _ = self.tick(name, df, truncate=False, count=False, detach=False)
+        return out
 
     def _detach(self, df: DataFrame) -> DataFrame:
         """Wrap a materialized frame as a fresh JVM DataFrame.
@@ -186,14 +276,20 @@ class SuperstepRunner:
         if new is not None:
             self._live[dst] = new
         if old is not None and old is not new:
-            old.unpersist()
+            _free(old)
 
     def release(self, name: str) -> None:
+        """Free slot `name`; any frame still reading it fails loudly."""
         old = self._live.pop(name, None)
         if old is not None:
-            old.unpersist()
+            _free(old)
 
-    def release_all(self) -> None:
+    def finish(self, *result_slots: str) -> None:
+        """End of an operator: hand `result_slots` over to the returned
+        result (forgotten without freeing — the result reads their
+        blocks) and release every other slot."""
+        for name in result_slots:
+            self._live.pop(name, None)
         for name in list(self._live):
             self.release(name)
 

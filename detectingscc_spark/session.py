@@ -73,4 +73,8 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # SuperstepRunner releases checkpoint RDDs on purpose, and Spark warns
+    # on every such unpersist that the truncated lineage cannot recompute
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR)
     return spark

@@ -2,6 +2,7 @@
 (SURVEY.md §2.11, north_rule companion algorithms)."""
 
 import os
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -12,16 +13,21 @@ from detectingscc_spark.operators.pagerank import pagerank
 from detectingscc_spark.operators.triangles import triangle_count, triangle_count_per_vertex
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
-from .conftest import REF_DATA
-from .oracles import cc_unionfind, lpa_sync, pagerank_numpy, triangles_brute
+from .oracles import cc_unionfind, kosaraju_scc, lpa_sync, pagerank_numpy, triangles_brute
+
+G128 = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "g128.gr")
 
 
 @pytest.fixture(scope="module")
 def g128(spark):
-    path = os.path.join(REF_DATA, "sample128.gr")
-    v, _ = gtgraph_meta(spark, path)
-    edges = read_gtgraph(spark, path)
+    """The committed seeded fixture (tests/data/gen_g128.py), checked to
+    have the FIXTURES.md §3 g128 shape before any test relies on it."""
+    v, e = gtgraph_meta(spark, G128)
+    edges = read_gtgraph(spark, G128)
     erows = [(r["src"], r["dst"]) for r in edges.collect()]
+    sizes = Counter(kosaraju_scc(erows, list(range(1, v + 1))).values())
+    assert (v, e, len(erows)) == (128, 374, 374)
+    assert (len(sizes), max(sizes.values()), sum(c == 1 for c in sizes.values())) == (13, 113, 10)
     return edges, erows, v
 
 

@@ -97,10 +97,10 @@ def test_scc_big_frontier_plain_shuffle_path(spark, monkeypatch, make_edges):
     """Frontier past the broadcast limit -> the plain shuffle-join hop
     (BROADCAST_ROW_LIMIT forced to 0), on a balanced and a hub-skewed
     graph. Output must stay exact."""
-    from detectingscc_spark.operators import scc as scc_mod
+    from detectingscc_spark.plans import superstep
     from .oracles import kosaraju_scc as _k
 
-    monkeypatch.setattr(scc_mod, "BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(superstep, "BROADCAST_ROW_LIMIT", 0)
     edges = make_edges()
     n = max(max(e) for e in edges) + 1
     df = spark.createDataFrame(edges, "src long, dst long")

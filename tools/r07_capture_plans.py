@@ -91,7 +91,7 @@ def main():
     else:
         Ew = Ew_raw.repartition("src").localCheckpoint(eager=True)
     if new_code:
-        from detectingscc_spark.operators.scc import _bc
+        from detectingscc_spark.plans.superstep import bc as _bc
 
         vts = verts.join(
             outdeg.select("id", F.lit(True).alias("has_out")), "id", "left"
@@ -130,8 +130,8 @@ def main():
 
     und_cc = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     lab = verts.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-    if "_bc(" in inspect.getsource(cc_mod.connected_components):
-        from detectingscc_spark.operators.scc import _bc
+    if "bc(" in inspect.getsource(cc_mod.connected_components):
+        from detectingscc_spark.plans.superstep import bc as _bc
 
         und_cc = persisted(und_cc.repartition("src"))
         cur = lab
@@ -165,12 +165,12 @@ def main():
     from detectingscc_spark.operators import lpa as lpa_mod
 
     und_l = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    if "_bc(" in inspect.getsource(lpa_mod.label_propagation):
+    if "bc(" in inspect.getsource(lpa_mod.label_propagation):
         und_l = persisted(und_l.repartition("dst"))
     else:
         und_l = und_l.repartition("dst").localCheckpoint(eager=True)
-    if "_bc(" in inspect.getsource(lpa_mod.label_propagation):
-        from detectingscc_spark.operators.scc import _bc
+    if "bc(" in inspect.getsource(lpa_mod.label_propagation):
+        from detectingscc_spark.plans.superstep import bc as _bc
 
         votes = (
             und_l.join(_bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n), "src")
@@ -221,7 +221,7 @@ def main():
     if "unionByName(re.select(F.col(\"dst\").alias(\"id\"), F.lit(0).alias(\"o\")))" in inspect.getsource(
         scc_mod.strongly_connected_components
     ):
-        from detectingscc_spark.operators.scc import _bc
+        from detectingscc_spark.plans.superstep import bc as _bc
 
         degs = (
             re_f.select(F.col("src").alias("id"), F.lit(1).alias("o"))
@@ -249,7 +249,7 @@ def main():
 
     col_df = active.select("id", F.col("id").alias("color")).localCheckpoint(eager=True)
     if "prop_jumps" in inspect.getsource(col_mod.scc_coloring):
-        from detectingscc_spark.operators.scc import _bc
+        from detectingscc_spark.plans.superstep import bc as _bc
 
         re_f = persisted(re_f.repartition("src"))
         cur = col_df
